@@ -384,8 +384,11 @@ def _place_by_bounds(
         # downstream literal array non-empty and well-typed
         groups, n_buckets, bucket_sql = [(None, 0, 1)], 1, "0"
 
+    # bucket b must land in partition b (ranked_by_range numbers rows
+    # per partition); more groups than partitions need more partitions
+    n = max(n, n_buckets)
     reps = _partition_reps(spark, n)
-    reps_sql = ", ".join(f"{r}L" for r in reps[:n_buckets]) or "0L"
+    reps_sql = ", ".join(f"{r}L" for r in reps[:n_buckets])
     placed = (
         df.selectExpr("*", f"CAST(({bucket_sql}) AS INT) AS __pid")
         .withColumn(

@@ -76,11 +76,20 @@ class FileJournalTransport:
     JSON event per line; the line number is the sequence offset.
     Appends model live arrival; range reads are idempotent by
     construction. Event fields: event_id, ts (epoch seconds), user_id,
-    event_type, value, props."""
+    event_type, value, props.
+
+    ``latest()`` reads only what was appended since its previous call:
+    it remembers, per shard, the ``(bytes, lines)`` it has counted and
+    reads on from there a chunk at a time, in constant memory. A
+    journal that no longer ends a line where the count stopped (it
+    shrank or was rewritten) is counted again from the start."""
+
+    CHUNK = 1 << 20
 
     def __init__(self, journal_dir: str, event_types: frozenset[str] | None):
         self._dir = journal_dir
         self._types = event_types
+        self._pos: dict[int, tuple[int, int]] = {}
 
     def _shard_path(self, shard: int) -> str:
         return os.path.join(self._dir, f"shard-{shard}.jsonl")
@@ -95,11 +104,28 @@ class FileJournalTransport:
         return sorted(out)
 
     def latest(self) -> dict[int, int]:
-        ends = {}
-        for shard in self._shards():
-            with open(self._shard_path(shard), "rb") as f:
-                ends[shard] = sum(1 for line in f if line.strip())
-        return ends
+        return {shard: self._count(shard) for shard in self._shards()}
+
+    def _count(self, shard: int) -> int:
+        """Non-blank lines of one shard. A trailing line without its
+        newline counts, as a line scan counts it, and is read again by
+        the next call."""
+        size, lines = self._pos.get(shard, (0, 0))
+        with open(self._shard_path(shard), "rb") as f:
+            if size:
+                f.seek(size - 1)
+                if f.read(1) != b"\n":  # shrank or rewritten
+                    size, lines = 0, 0
+                    f.seek(0)
+            tail = b""
+            while chunk := f.read(self.CHUNK):
+                data = tail + chunk
+                done = data.rfind(b"\n") + 1
+                lines += sum(1 for line in data[:done].split(b"\n") if line.strip())
+                size += done
+                tail = data[done:]
+        self._pos[shard] = (size, lines)
+        return lines + bool(tail.strip())
 
     def fetch(self, shard: int, lo: int, hi: int) -> Iterable[tuple]:
         with open(self._shard_path(shard), "rb") as f:

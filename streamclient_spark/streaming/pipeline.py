@@ -16,13 +16,33 @@ bulk sinks instead of per-event round-trips; checkpointed offsets +
 idempotent upsert → effectively-once state (vs at-most-once); metrics
 from ``df.observe`` (event-time max, fixing the set-on-arrival gauge
 quirk §0.2(3)).
+
+Per-batch job budget: at most 4 Spark jobs per micro-batch, whatever
+its size (``test_pipeline_micro_batch_job_budget``):
+
+1. the bus publish. It is the batch's first action and materializes
+   the persisted batch; an ``Observation`` on it yields the
+   ``PipelineMetrics`` values (count, max event ts), so they take no
+   job of their own;
+2. the state sink's broadcast of the batch's bucket ids, which also
+   prunes the store read to the dirty buckets;
+3. the sink's merge shuffle: one ``row_number`` window over store ∪
+   batch folds the batch to its last change per key by event order
+   and merges it with the store;
+4. the sink's staged write, whose ``Observation`` names the buckets
+   to swap.
+
+Starting the pipeline raises the session's
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` to the
+state store's bucket count (if lower), once, so that Spark lists the
+store's bucket directories on the driver instead of in a fifth job.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -30,6 +50,7 @@ from streamclient_spark.streaming.lifecycle import open_alerts_stream
 from streamclient_spark.streaming.sinks import (
     PublisherFactory,
     bus_sink_batch,
+    observed,
     upsert_state_batch,
 )
 
@@ -51,6 +72,10 @@ def project_events(events: DataFrame) -> DataFrame:
         F.col("value").alias("xp"),
         F.col("ts"),
     )
+
+
+#: hash buckets of the state store (the sink's default layout)
+STATE_BUCKETS = 64
 
 
 @dataclass
@@ -88,31 +113,44 @@ def metagame_pipeline(
 
     One ``foreachBatch`` performs both sinks against the *same*
     microbatch (the reference does both in one handler, sequentially
-    per event; here it is sequentially per batch with bulk calls).
+    per event; here it is sequentially per batch with bulk calls), in
+    the 4 jobs the module docstring lists.
     ``make_publisher`` is invoked per partition task on the executors —
     the bus path never funnels through the driver.
     """
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark = events.sparkSession
+    if int(spark.conf.get(key)) < STATE_BUCKETS:
+        spark.conf.set(key, str(STATE_BUCKETS))
     projected = project_events(events).observe(
         "pipeline_metrics",
         F.count(F.lit(1)).alias("n"),
         F.max("ts").alias("max_ts"),
     )
     bus = bus_sink_batch(make_publisher)
-    upsert = upsert_state_batch(state_path)
+    upsert = upsert_state_batch(
+        state_path, n_buckets=STATE_BUCKETS, tiebreak="ts_seq"
+    )
     m = metrics
 
     def fan_out(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            bus(batch_df, batch_id)
-            # lifecycle folding within the batch: last state per key wins
-            w_last = Window.partitionBy("id").orderBy(
-                F.desc("ts"), F.desc("seq")
+            # the publish is the batch's first job; its observation
+            # carries the batch metrics, so they cost no job of their own
+            seen = Observation()
+            bus(
+                batch_df.observe(
+                    seen,
+                    F.count(F.lit(1)).alias("n"),
+                    F.max("ts").alias("max_ts"),
+                ),
+                batch_id,
             )
-            changes = (
-                batch_df.withColumn("rn", F.row_number().over(w_last))
-                .filter(F.col("rn") == 1)
-                .select(
+            # lifecycle folding: the sink's one window picks the last
+            # state per key by event order (ts, seq)
+            upsert(
+                batch_df.select(
                     "id",
                     F.when(F.col("state") == open_state, "open")
                     .otherwise("closed")
@@ -120,14 +158,12 @@ def metagame_pipeline(
                     (F.col("ts").cast("double") * 1_000_000)
                     .cast("bigint")
                     .alias("last_ts_us"),
-                )
+                    F.struct("ts", "seq").alias("ts_seq"),
+                ),
+                batch_id,
             )
-            upsert(changes, batch_id)
             if m is not None:
-                agg = batch_df.agg(
-                    F.count(F.lit(1)).alias("n"), F.max("ts").alias("max_ts")
-                ).collect()[0]
-                m.record(agg)
+                m.record(observed(seen, n=0, max_ts=None))
         finally:
             batch_df.unpersist()
 

@@ -18,7 +18,7 @@ which is strictly stronger than the reference's at-most-once posture
 Scale notes:
 
 - The bus publisher runs **per partition task on the executors**
-  (``foreachPartition``): each task builds its own producer via the
+  (``mapInArrow``): each task builds its own producer via the
   injected factory and publishes its partition's payloads — the
   standard producer-per-task shape of the Kafka sink. Nothing flows
   through the driver, so driver memory and the driver NIC are not a
@@ -31,6 +31,12 @@ Scale notes:
   directory rename. At 100 TB the function body becomes ``MERGE INTO``
   on a transactional table (Delta/Iceberg) with the same call
   signature; bucketing by key is also exactly the layout MERGE wants.
+- Every sink evaluates its batch once, in its staged write, finds its
+  dirty partitions without a job of its own and reads its store with
+  a known schema. The upsert sink runs 3 jobs a batch (one more when
+  Spark lists the store's bucket directories in a job of its own);
+  with the bus publish that is the pipeline's 4 (see
+  ``streaming.pipeline``).
 """
 
 from __future__ import annotations
@@ -38,9 +44,9 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 #: Per-partition publisher: receives one list of serialized payloads.
@@ -63,16 +69,28 @@ def bus_sink_batch(
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` function publishing each microbatch to a message
     bus (A6), distributed: every partition task constructs a publisher
-    from the factory and bulk-publishes its own rows. No ``collect()``
-    — payloads never transit the driver."""
+    from the factory and bulk-publishes its own rows. Payloads never
+    transit the driver; the driver collects one count per partition.
 
-    def _publish_partition(rows: Iterator) -> None:
-        payloads = [r["payload"].encode("utf-8") for r in rows]
+    The publish is one Dataset action (``mapInArrow`` + ``collect``),
+    not ``foreachPartition``: an ``Observation`` on ``batch_df`` is
+    filled only by a Dataset action, so observed batch metrics ride
+    this job instead of needing one of their own."""
+
+    def _publish_partition(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        payloads = [
+            p.encode("utf-8")
+            for rb in batches
+            for p in rb.column(0).to_pylist()
+        ]
         if payloads:
             make_publisher()(payloads)
+        yield pa.RecordBatch.from_pydict({"n": [len(payloads)]})
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        to_wire(batch_df).foreachPartition(_publish_partition)
+        to_wire(batch_df).mapInArrow(_publish_partition, "n long").collect()
 
     return _sink
 
@@ -109,23 +127,101 @@ def read_published(out_dir: str) -> list[bytes]:
     return payloads
 
 
+def _stage_swap(
+    df: DataFrame,
+    store_path: str,
+    partition_by: list[str],
+    tag: str,
+    dirty: Callable[[str], Iterable[str]],
+) -> None:
+    """Write ``df`` partitioned by ``partition_by`` to a staging
+    directory beside ``store_path``, then move each directory that
+    ``dirty(stage)`` names (paths relative to both roots, asked for
+    after the write) into the store with an atomic rename. A named
+    directory the stage lacks is removed from the store: every key in
+    it was deleted. The stage is removed on every way out."""
+    tmp = f"{store_path}.{tag}-{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
+    try:
+        for rel in dirty(tmp):
+            src = os.path.join(tmp, rel)
+            dst = os.path.join(store_path, rel)
+            old = dst + ".old"
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            shutil.rmtree(old, ignore_errors=True)
+            if os.path.exists(dst):
+                os.rename(dst, old)
+            if os.path.exists(src):
+                os.rename(src, dst)
+            shutil.rmtree(old, ignore_errors=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def observed(seen: Observation, **empty) -> dict:
+    """``seen.get``, or ``empty`` when Spark dropped the observation
+    from a plan it proved empty (no row flowed through it).
+
+    A shim for Spark 4.1 (checked on 4.1.2): when the optimizer
+    replaces a plan it proves empty (a window over a statically empty
+    batch) with an empty relation, the observation's ``CollectMetrics``
+    node goes with it, yet the observation is still completed, with a
+    row of no fields. ``Observation.get`` then fails converting that
+    row (``PythonSQLUtils.toPyRow``), and PySpark offers no public way
+    to tell, so this asks PySpark's private JVM handle ``_jo`` for the
+    row's width. ``test_upsert_sink_equals_python_last_writer_fold``
+    covers the case; recheck it on a Spark upgrade."""
+    return seen.get if seen._jo.getRow().length() else empty
+
+
+def _listed(root: str, prefix: str) -> list[str]:
+    """Partition directories ``prefix*`` under ``root`` (none when it
+    does not exist), without a swap's leftover ``.old`` copies."""
+    if not os.path.isdir(root):
+        return []
+    return [
+        n
+        for n in os.listdir(root)
+        if n.startswith(prefix) and not n.endswith(".old")
+    ]
+
+
+def _dirty_store(store_path: str, batch: DataFrame, n_buckets: int) -> DataFrame:
+    """The store's rows in the buckets ``batch`` touches, read with
+    ``batch``'s schema (no inference job). The semi join on the
+    partition column becomes a dynamic pruning filter reusing the
+    join's broadcast of the batch's bucket ids (Spark adds it only when
+    that side has a predicate: the always-true range check). Spark
+    lists the bucket directories on the driver up to
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` of them
+    and in a listing job above it (``metagame_pipeline`` raises it to
+    its bucket count)."""
+    ids = batch.select("bucket").filter(F.col("bucket") < n_buckets)
+    store = batch.sparkSession.read.schema(batch.schema).parquet(store_path)
+    return store.join(ids, "bucket", "left_semi")
+
+
 def upsert_state_batch(
     store_path: str,
     key_col: str = "id",
     tombstone: str = "closed",
     ts_col: str = "last_ts_us",
     n_buckets: int = 64,
+    tiebreak: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` keyed upsert into a bucketed parquet state
     table: rows with ``state == tombstone`` delete their key (A8), all
     others insert/replace it (A7).
 
-    Determinism and ordering guarantees:
+    Determinism and ordering guarantees, all from ONE ``row_number``
+    over store ∪ batch per key, ordered by (``ts_col`` desc, batch
+    before store, ``tiebreak`` desc, ``state`` desc):
 
-    - **In-batch reduce**: one winner per key by ``max(ts_col)`` (ties
-      broken by ``state`` descending, then arbitrary-but-deterministic
-      column order) — never ``dropDuplicates``, whose survivor depends
-      on partition arrival order.
+    - **In-batch reduce**: one winner per key by ``max(ts_col)``; equal
+      ``ts_col`` goes to the highest ``tiebreak`` (a batch-only column,
+      dropped before the write — the pipeline passes the event order),
+      then to ``state`` descending — never ``dropDuplicates``, whose
+      survivor depends on partition arrival order.
     - **Cross-batch guard**: a store row is only replaced by a change
       with ``ts_col`` >= the stored one, so a late microbatch carrying
       an older change cannot clobber newer state (complements the same
@@ -134,82 +230,51 @@ def upsert_state_batch(
       (batch wins ties against the store with equal rows) →
       effectively-once under retries.
 
-    I/O: only the hash buckets containing this batch's keys are read,
-    merged, and atomically swapped (directory rename); untouched
-    buckets are not rewritten. The 100 TB path is ``MERGE INTO`` on a
-    transactional table — same signature, same bucketed layout.
+    Cost: the batch is evaluated once, by the staged write, which runs
+    3 jobs (the broadcast of the batch's bucket ids, the merge shuffle
+    and the write; see :func:`_dirty_store` for a fourth). The store read has a known schema and is pruned to
+    the dirty buckets by :func:`_dirty_store`; the write fills an
+    ``Observation`` of the batch's bucket ids, which names the buckets
+    to swap. Untouched buckets are neither read nor rewritten, and each
+    dirty bucket is rewritten as one file. The 100 TB path is ``MERGE INTO``
+    on a transactional table — same signature, same bucketed layout.
     """
+
+    extra = [tiebreak] if tiebreak else []
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        bucket_of = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-
-        # deterministic last-writer-wins reduce within the batch
-        w = Window.partitionBy(key_col).orderBy(
-            F.desc(ts_col), F.desc("state")
+        w = Window.partitionBy("bucket", key_col).orderBy(
+            F.desc(ts_col), F.desc("_src"), *map(F.desc, extra), F.desc("state")
         )
-        batch = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .withColumn("bucket", bucket_of)
+        batch = batch_df.withColumn(
+            "bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
         )
-
-        dirty = [
-            r["bucket"]
-            for r in batch.select("bucket").distinct().collect()
-        ]
-        if not dirty:
-            return
-
-        has_store = os.path.isdir(store_path) and any(
-            n.startswith("bucket=") for n in os.listdir(store_path)
-        )
-        if has_store:
-            current = (
-                spark.read.parquet(store_path)
-                .filter(F.col("bucket").isin(dirty))  # partition-pruned
-                .withColumn("_src", F.lit(0))
+        seen = Observation()
+        combined = batch.observe(
+            seen, F.collect_set("bucket").alias("b")
+        ).withColumn("_src", F.lit(1))
+        if _listed(store_path, "bucket="):
+            store = _dirty_store(store_path, batch.drop(*extra), n_buckets)
+            combined = combined.unionByName(
+                store.withColumn("_src", F.lit(0)),
+                allowMissingColumns=True,
             )
-            combined = current.unionByName(
-                batch.withColumn("_src", F.lit(1))
-            )
-        else:
-            combined = batch.withColumn("_src", F.lit(1))
-
-        # newest change per key wins; the batch beats the store on ties
-        # (identical replays converge — idempotent)
-        w_merge = Window.partitionBy(key_col).orderBy(
-            F.desc(ts_col), F.desc("_src"), F.desc("state")
-        )
+        # the merge shuffle clusters by bucket (the window's (bucket,
+        # key) partitioning rides it), so each dirty bucket is written
+        # as one file; a fixed width keeps the write parallel where AQE
+        # would coalesce a small batch into one writing task
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
         merged = (
-            combined.withColumn("_rn", F.row_number().over(w_merge))
-            .filter(F.col("_rn") == 1)
-            .filter(F.col("state") != tombstone)
-            .drop("_rn", "_src")
+            combined.repartition(width, "bucket")
+            .withColumn("_rn", F.row_number().over(w))
+            .filter((F.col("_rn") == 1) & (F.col("state") != tombstone))
+            .drop("_rn", "_src", *extra)
         )
-
-        # stage the dirty buckets, then swap each with an atomic rename
-        tmp = f"{store_path}.stage-{batch_id}-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        try:
-            os.makedirs(store_path, exist_ok=True)
-            for b in dirty:
-                src = os.path.join(tmp, f"bucket={b}")
-                dst = os.path.join(store_path, f"bucket={b}")
-                old = dst + ".old"
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-                if os.path.exists(dst):
-                    os.rename(dst, old)
-                if os.path.exists(src):
-                    os.rename(src, dst)
-                # bucket emptied (every key deleted): no src dir → the
-                # rename of dst to old already removed it from the store
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        _stage_swap(
+            merged, store_path, ["bucket"], f"stage-{batch_id}",
+            lambda _: [f"bucket={b}" for b in observed(seen, b=[])["b"]],
+        )
 
     return _sink
 
@@ -269,33 +334,15 @@ def rollup_sink_batch(
             )
             .withColumn("batch", F.lit(batch_id))
         )
-        dirty = [r["hour"] for r in partials.select("hour").distinct().collect()]
-        if not dirty:
-            return
-        tmp = f"{store_path}.stage-{batch_id}-{uuid.uuid4().hex[:8]}"
-        partials.write.mode("overwrite").partitionBy("hour", "batch").parquet(
-            tmp
+        # every hour the batch touches has a slice, so the stage's own
+        # hour dirs are the dirty set: the write is the only job
+        _stage_swap(
+            partials, store_path, ["hour", "batch"], f"stage-{batch_id}",
+            lambda tmp: [
+                os.path.join(h, f"batch={batch_id}")
+                for h in _listed(tmp, "hour=")
+            ],
         )
-        try:
-            os.makedirs(store_path, exist_ok=True)
-            for h in dirty:
-                os.makedirs(
-                    os.path.join(store_path, f"hour={h}"), exist_ok=True
-                )
-                src = os.path.join(tmp, f"hour={h}", f"batch={batch_id}")
-                dst = os.path.join(
-                    store_path, f"hour={h}", f"batch={batch_id}"
-                )
-                old = dst + ".old"
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-                if os.path.exists(dst):
-                    os.rename(dst, old)  # replayed batch replaces itself
-                os.rename(src, dst)
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     return _sink
 
@@ -321,11 +368,7 @@ def compact_rollup(spark: SparkSession, store_path: str) -> None:
     (``batch=-1``) — bounded storage for the partial log. Safe to run
     between batches: the fold is the same associative merge
     :func:`read_rollup` performs, and each hour's swap is atomic."""
-    hours = [
-        int(n.split("=", 1)[1])
-        for n in os.listdir(store_path)
-        if n.startswith("hour=")
-    ]
+    hours = _listed(store_path, "hour=")
     if not hours:
         return
     base = (
@@ -338,24 +381,7 @@ def compact_rollup(spark: SparkSession, store_path: str) -> None:
         )
         .withColumn("batch", F.lit(-1))
     )
-    tmp = f"{store_path}.compact-{uuid.uuid4().hex[:8]}"
-    base.write.mode("overwrite").partitionBy("hour", "batch").parquet(tmp)
-    try:
-        for h in hours:
-            hdir = os.path.join(store_path, f"hour={h}")
-            src = os.path.join(tmp, f"hour={h}", "batch=-1")
-            stage = hdir + ".stage"
-            old = hdir + ".old"
-            for d in (stage, old):
-                if os.path.exists(d):
-                    shutil.rmtree(d)
-            os.makedirs(stage)
-            os.rename(src, os.path.join(stage, "batch=-1"))
-            os.rename(hdir, old)
-            os.rename(stage, hdir)
-            shutil.rmtree(old)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    _stage_swap(base, store_path, ["hour", "batch"], "compact", lambda _: hours)
 
 
 # ---------------------------------------------------------------------------
@@ -399,7 +425,6 @@ def scd2_sink_batch(
     bucketed-by-key layout are exactly what that MERGE wants."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         bucket_of = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
 
         # collapse equal-ts duplicates, then chain versions in ts order
@@ -423,28 +448,15 @@ def scd2_sink_batch(
             )
             .withColumn("bucket", bucket_of)
         )
-        dirty = [
-            r["bucket"] for r in changes.select("bucket").distinct().collect()
-        ]
-        if not dirty:
-            return
-
-        has_store = os.path.isdir(store_path) and any(
-            n.startswith("bucket=") for n in os.listdir(store_path)
-        )
-        if has_store:
-            store = spark.read.parquet(store_path).filter(
-                F.col("bucket").isin(dirty)
-            )
+        if _listed(store_path, "bucket="):
+            store = _dirty_store(store_path, changes, n_buckets)
+            current = store.filter(F.col("valid_to_us").isNull())
             # first strictly-newer change per key closes the current row
             firsts = (
                 changes.groupBy(key_col)
                 .agg(F.min("valid_from_us").alias("_first_ts"))
             )
-            cur = store.filter(F.col("valid_to_us").isNull()).join(
-                firsts, key_col, "left"
-            )
-            closed = cur.select(
+            closed = current.join(firsts, key_col, "left").select(
                 key_col,
                 "state",
                 "valid_from_us",
@@ -458,7 +470,7 @@ def scd2_sink_batch(
             )
             # late-event guard: drop batch changes not strictly newer
             # than the stored current version
-            guard = store.filter(F.col("valid_to_us").isNull()).select(
+            guard = current.select(
                 key_col, F.col("valid_from_us").alias("_cur_from")
             )
             fresh = (
@@ -477,24 +489,12 @@ def scd2_sink_batch(
         else:
             merged = changes
 
-        tmp = f"{store_path}.stage-{batch_id}-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        try:
-            os.makedirs(store_path, exist_ok=True)
-            for b in dirty:
-                src = os.path.join(tmp, f"bucket={b}")
-                dst = os.path.join(store_path, f"bucket={b}")
-                old = dst + ".old"
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-                if os.path.exists(dst):
-                    os.rename(dst, old)
-                if os.path.exists(src):
-                    os.rename(src, dst)
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        # history only grows: every dirty bucket keeps rows, so the
+        # stage's own bucket dirs are the dirty set
+        _stage_swap(
+            merged, store_path, ["bucket"], f"stage-{batch_id}",
+            lambda tmp: _listed(tmp, "bucket="),
+        )
 
     return _sink
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from streamclient_spark.scale import (
@@ -191,6 +192,38 @@ def test_ranked_by_range_matches_window_row_number(spark, sf_oracle):
     assert "element_at(" in plan
     assert "rangepartitioning" not in plan
     assert "broadcasthashjoin" not in plan
+
+
+RANGE_LAYOUT_CONSUMERS = [
+    "q_customer_migration",
+    "q_events_rfm",
+    "q_rank_global",
+    "q_sample_shuffle",
+    "q_supplier_scorecard",
+]
+
+
+@pytest.mark.parametrize("partitions", ["1", "2"])
+def test_range_layout_consumers_match_oracle_on_few_partitions(
+    spark, sf_oracle, partitions
+):
+    """Every ``ranked_by_range`` consumer hash-matches its oracle when
+    ``spark.sql.shuffle.partitions`` is below its group count (each
+    group takes at least one bucket, so the layout has more buckets
+    than partitions), as on a 1- or 2-core machine."""
+    from streamclient_spark.plans.registry import load_all
+    from tests.oracle import compare
+
+    specs = load_all()
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    try:
+        for name in RANGE_LAYOUT_CONSUMERS:
+            spec = specs[name]
+            report = compare(spec.builder(spark, sf_oracle), spec.oracle, sf_oracle)
+            assert not report["errors"], f"{name}: {report['errors']}"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def test_running_sum_by_range_matches_global_window(spark, sf_oracle):
