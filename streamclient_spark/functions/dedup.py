@@ -374,69 +374,21 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs after pair generation: A≈B and B≈C must collapse to
     one kept document even when A≈C was never scored.
 
-    Components are computed by distributed min-label propagation:
-    every node starts as its own label, and each round takes the min of
-    its own and its neighbors' labels (one equi-join + partial-agg
-    min per round, ``localCheckpoint`` to cut lineage). Rounds =
-    graph diameter — near-dup components are tiny dense cliques, so
-    2-3 rounds in practice; for unknown/large diameters use the
-    O(log n)-round alternating variant
-    (:func:`streamclient_spark.scale.connected_components_star`,
-    tested equal to this query's labels). The driver-side loop is
-    control flow only (a convergence count per round) — all data
-    stays distributed.
+    Components come from
+    :func:`streamclient_spark.scale.connected_components_star` over the
+    pair graph (its loop is :func:`streamclient_spark.scale.fixpoint`,
+    which owns the checkpoint and probe); it labels every node with
+    its component's minimum id, the canonical survivor.
 
     The oracle computes the same components by recursive transitive
     closure, which is only viable because components are small — the
-    propagation formulation is the one that scales."""
+    star formulation is the one that scales."""
+    from streamclient_spark.scale import connected_components_star
+
     release_managed()
-    # persist BEFORE the symmetric union: both union branches reference
-    # the pair subtree, which would otherwise run the whole LSH+verify
-    # pipeline twice
-    pairs = managed_persist(
-        near_dup_pairs(spark, sf_dir).select("a_id", "b_id")
+    labels, _rounds = connected_components_star(
+        near_dup_pairs(spark, sf_dir), src="a_id", dst="b_id"
     )
-    edges = managed_persist(
-        pairs.union(pairs.select(F.col("b_id"), F.col("a_id"))).toDF(
-            "src", "dst"
-        )
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)  # materialized by round 1's sum
-    )
-    while True:
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        # the changed flag rides on the update row itself (nmin < label
-        # ⟺ this round lowered the node's label), so convergence is one
-        # tiny aggregate over the checkpointed frame — not a second
-        # O(nodes) self-join per round. r12: the checkpoint is LAZY
-        # and the chg sum below doubles as its materializer (a global
-        # aggregate over every partition — the star-CC device; one job
-        # per round instead of two)
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nmin", F.col("label"))
-                ).alias("label"),
-                (F.coalesce("nmin", F.col("label")) < F.col("label"))
-                .cast("int")
-                .alias("chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = updated.agg(F.sum("chg")).first()[0]
-        labels = updated.drop("chg")
-        if not changed:
-            break
     w = Window.partitionBy("cluster_id")
     return (
         labels.select(

@@ -4534,11 +4534,12 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the SAME two half-steps for 8 rounds in SQL, and
     because a converged edge set is a fixpoint of both half-steps, the
     8-round state equals the engine's converged state whenever
-    convergence takes ≤ 8 rounds (measured: 5 at sf0.01, 4 at sf1;
-    pinned by a test). Label propagation would need diameter-many
-    rounds; star contraction is the 100 TB shape — every round is two
+    convergence takes ≤ 8 rounds (measured: 5 at sf0.01, pinned by a
+    test). Label propagation would need diameter-many rounds; star
+    contraction is the 100 TB shape — every round is two
     min-aggregates plus two co-partitioned joins on the edge list,
-    lineage cut per round, convergence checked by a 1-row checksum."""
+    looped by :func:`scale.fixpoint` (checkpoint and probe contract
+    there)."""
     from streamclient_spark.scale import connected_components_star
 
     e = _copurchase_edges(spark, sf_dir)
@@ -5477,12 +5478,13 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree < 3 until stable; output the surviving nodes with their
     within-core degree — the dense-subgraph extractor (spam rings,
     community cores; the graph analog of the dedup support floors).
-    The scale.kcore kernel peels to the checksum-detected fixpoint;
-    the oracle replays the SAME rounds unrolled in SQL (a fixpoint is
-    stable under extra rounds, so the margin unroll is safe — the
-    q_graph_cc device, convergence pinned by test). Per round: one
-    map-combined degree aggregate + two semi-joins of the edge list,
-    lineage cut per round; the keyed edge index feeds round 0."""
+    The scale.kcore kernel peels to the checksum-detected fixpoint
+    (looped by :func:`scale.fixpoint`, checkpoint and probe contract
+    there); the oracle replays the SAME rounds unrolled in SQL (a
+    fixpoint is stable under extra rounds, so the margin unroll is
+    safe — the q_graph_cc device, convergence pinned by test). Per
+    round: one map-combined degree aggregate + two semi-joins of the
+    edge list; the keyed edge index feeds round 0."""
     from streamclient_spark.scale import kcore
 
     e = _copurchase_edges(spark, sf_dir)
@@ -6257,10 +6259,11 @@ def q_join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 #: unrolled min-relaxation rounds in the q_graph_bfs oracle. Measured
-#: layered-BFS fixpoint: 2 rounds at sf0.001, 6 at sf0.01, 5 at sf0.1
-#: (the sf0.01 graph is the connectivity maximum, same as k-core's
-#: round curve) — 10 covers the observed max with margin, and a
-#: converged distance table is a fixpoint under further relaxation.
+#: seed eccentricity: 2 hops at sf0.001, 6 at sf0.01, 5 at sf0.1 (the
+#: sf0.01 graph is the connectivity maximum, same as k-core's round
+#: curve); the fixpoint's round count is one more (its last round adds
+#: nothing). 10 covers it with margin, and a converged distance table
+#: is a fixpoint under further relaxation.
 #: tests/test_scale.py::test_bfs_converges_within_oracle_unroll pins it.
 _BFS_ROUNDS = 10
 _BFS_SEEDS = 32
@@ -6319,23 +6322,12 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance histogram plus a ``dist = -1`` row counting nodes in
     seedless components (never reached).
 
-    Engine: layered frontier expansion — per round ONE join of the
-    frontier onto the node-partitioned adjacency, a distinct, and an
-    anti-join against settled nodes; every step rides the same node
-    hash, the frontier never revisits settled nodes (each node joins
-    exactly once), so total work is O(|E|) across all rounds — the
-    textbook Pregel BFS in DataFrame form. Rounds are bounded by seed
-    eccentricity (≤6 measured; hubs keep it small-world). Each layer
-    is ``localCheckpoint``-ed: BOTH the next frontier and the
-    settled set embed the previous layer's plan, so without lineage
-    truncation the plan tree DOUBLES per round and Catalyst analysis
-    time goes exponential (measured: 0.8 s → 33 s by round 6 with
-    plain persist; flat ~0.8 s/round checkpointed) — the jobs were
-    never the cost, the plannings were. r12: the checkpoints are LAZY
-    and each layer is materialized by its emptiness COUNT (a global
-    aggregate over every partition — the star-CC materializer device)
-    — one job per round instead of the eager-checkpoint + isEmpty
-    pair. The oracle replays min-relaxation for _BFS_ROUNDS rounds; a
+    Engine: the single-tag case of the tagged multi-source BFS
+    (:func:`_bfs_layers`, all seeds share one tag): layered frontier
+    expansion, each node joining once, O(|E|) total work, rounds
+    bounded by seed eccentricity (hubs keep it small-world). Its loop
+    is :func:`scale.fixpoint`, which owns the checkpoint and probe.
+    The oracle replays min-relaxation for _BFS_ROUNDS rounds; a
     convergence test pins the margin (the q_graph_cc /
     q_graph_kcore rule)."""
     dist, adj, _rounds = _bfs_layers(spark, sf_dir)
@@ -6354,57 +6346,72 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bfs_layers(spark: SparkSession, sf_dir: str):
-    """Layered multi-source BFS over the co-purchase graph. Returns
-    ``(dist, adj, rounds)``: the settled ``(node, d)`` table, the
-    symmetrized adjacency, and the number of expansion rounds to
-    fixpoint (tests pin ``rounds <= _BFS_ROUNDS``)."""
+def _bfs_layers(
+    spark: SparkSession,
+    sf_dir: str,
+    n_seeds: int = _BFS_SEEDS,
+    tag_each_seed: bool = False,
+):
+    """Tagged multi-source BFS over the co-purchase graph from its
+    top-``n_seeds`` hubs (degree desc, node asc). Each seed carries a
+    tag ``s`` and a node is settled once per tag, at its hop distance
+    from the nearest seed with that tag: every seed shares tag 0 for
+    q_graph_bfs's distance-to-set, and each seed is its own tag (its
+    node id) for q_graph_closeness.
+
+    Per round ONE join of the frontier onto the node-partitioned
+    adjacency, a distinct, and an anti-join against the settled
+    ``(s, node)`` set, every step riding the node hash; a node joins
+    at most once per tag, so total work is O(tags·|E|), the Pregel BFS
+    in DataFrame form. Rounds run under :func:`scale.fixpoint`, whose
+    per-round lineage cut keeps the plan from doubling each round
+    (both the frontier and the settled set embed the previous state);
+    settled rows only grow, so a row count is the probe.
+
+    Returns ``(dist, adj, rounds)``: the settled ``(s, node, d)``
+    table, the symmetrized adjacency, and the fixpoint's round count
+    (tests pin it within the oracles' unrolls)."""
+    from streamclient_spark.scale import fixpoint
+
     e = _copurchase_edges(spark, sf_dir)
     adj = (
         e.select(F.col("u"), F.col("v"))
         .unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition(8, "u")
-        # lazy (r12): materialized by round 1's frontier count — the
-        # blocks are stored identically, one fewer up-front job
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # materialized by the seed probe
     )
-    deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     seeds = (
-        deg.orderBy(F.desc("d"), F.asc("u"))
-        .limit(_BFS_SEEDS)
-        .select(F.col("u").alias("node"), F.lit(0).alias("d"))
-        .localCheckpoint(eager=False)
+        adj.groupBy("u")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .orderBy(F.desc("deg"), F.asc("u"))
+        .limit(n_seeds)
+        .select(
+            (F.col("u") if tag_each_seed else F.lit(0)).alias("s"),
+            F.col("u").alias("node"),
+            F.lit(0).alias("d"),
+            F.lit(True).alias("frontier"),
+        )
     )
-    dist = seeds
-    frontier = seeds
-    r = 0
-    while True:
-        r += 1
+
+    def expand(dist: DataFrame) -> DataFrame:
         nxt = (
             adj.join(
-                frontier.select(F.col("node").alias("u")),
+                dist.filter("frontier").select(
+                    "s", F.col("node").alias("u"), "d"
+                ),
                 "u",
             )
-            .select(F.col("v").alias("node"))
+            .select("s", F.col("v").alias("node"), (F.col("d") + 1).alias("d"))
             .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .select("node", F.lit(r).alias("d"))
-            # lazy: the count below is a global aggregate over every
-            # partition, so it materializes the layer's blocks exactly
-            # as the eager form did — ONE job per round instead of the
-            # r11 checkpoint-job + isEmpty-probe pair (the star-CC
-            # checksum-materializer device; it must stay a full count,
-            # a take/isEmpty probe would skip partitions)
-            .localCheckpoint(eager=False)
+            .join(dist.select("s", "node"), ["s", "node"], "left_anti")
+            .withColumn("frontier", F.lit(True))
         )
-        if nxt.count() == 0:
-            break
-        # flat union of checkpointed layers — plan grows linearly
-        dist = dist.unionAll(nxt)
-        frontier = nxt
-        if r > 64:  # safety valve; eccentricity is small-world bounded
-            break
-    return dist, adj, r - 1
+        return dist.withColumn("frontier", F.lit(False)).unionByName(nxt)
+
+    dist, rounds = fixpoint(
+        expand, seeds, probe=[F.count(F.lit(1))], max_rounds=64
+    )
+    return dist.drop("frontier"), adj, rounds
 
 
 # ---------------------------------------------------------------------------
@@ -9977,19 +9984,15 @@ def q_graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_graph_bfs's distance-to-set histogram (the set collapses all
     seeds into one frontier; this keeps them apart).
 
-    Engine: the layered Pregel BFS kernel lifted to (seed, node)
-    state — per round one join of the composite frontier onto the
-    node-partitioned adjacency, a distinct, and an anti-join against
-    the settled (seed, node) set, every step riding the node hash.
-    Each node is settled at most once PER SEED, so total work is
-    O(seeds·|E|) across all rounds; layers are lazily
-    localCheckpoint-ed and materialized by the per-round frontier
-    count (r12 — one job per round instead of the checkpoint +
-    isEmpty pair; the q_graph_bfs lineage-doubling lesson still
-    holds: the lazy cut bounds Catalyst the same). The oracle unrolls
-    {_CLOSE_ROUNDS} relaxation rounds; a convergence test pins the
-    engine fixpoint within that margin."""
-    dist, _rounds = _closeness_layers(spark, sf_dir)
+    Engine: the tagged multi-source BFS (:func:`_bfs_layers`) with
+    each seed its own tag, so every node is settled at most once PER
+    SEED and total work is O(seeds·|E|); its loop is
+    :func:`scale.fixpoint`, which owns the checkpoint and probe. The
+    oracle unrolls {_CLOSE_ROUNDS} relaxation rounds; a convergence
+    test pins the engine fixpoint within that margin."""
+    dist, _adj, _rounds = _bfs_layers(
+        spark, sf_dir, _CLOSE_SEEDS, tag_each_seed=True
+    )
     return dist.groupBy(F.col("s").alias("seed")).agg(
         F.count(F.lit(1)).cast("long").alias("n_reached"),
         F.sum("d").cast("long").alias("total_dist"),
@@ -9998,52 +10001,6 @@ def q_graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_dist_permille"
         ),
     )
-
-
-def _closeness_layers(spark: SparkSession, sf_dir: str):
-    """Layered per-seed BFS over the co-purchase graph. Returns
-    ``(dist, rounds)``: the settled (s, node, d) table and the number
-    of expansion rounds to fixpoint (tests pin
-    ``rounds <= _CLOSE_ROUNDS``)."""
-    e = _copurchase_edges(spark, sf_dir)
-    adj = (
-        e.select(F.col("u"), F.col("v"))
-        .unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(8, "u")
-        .localCheckpoint(eager=False)  # materialized by round 1's count
-    )
-    deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    seeds = (
-        deg.orderBy(F.desc("d"), F.asc("u"))
-        .limit(_CLOSE_SEEDS)
-        .select(F.col("u").alias("s"), F.col("u").alias("node"),
-                F.lit(0).alias("d"))
-        .localCheckpoint(eager=False)
-    )
-    dist = seeds
-    frontier = seeds
-    r = 0
-    while True:
-        r += 1
-        nxt = (
-            adj.join(
-                frontier.select("s", F.col("node").alias("u")), "u"
-            )
-            .select("s", F.col("v").alias("node"))
-            .distinct()
-            .join(dist.select("s", "node"), ["s", "node"], "left_anti")
-            .select("s", "node", F.lit(r).alias("d"))
-            # lazy: the full count below materializes the layer's
-            # blocks (global aggregate — must not become take/isEmpty)
-            .localCheckpoint(eager=False)
-        )
-        if nxt.count() == 0:
-            break
-        dist = dist.unionAll(nxt)
-        frontier = nxt
-        if r > 64:  # safety valve; small-world bounded
-            break
-    return dist, r - 1
 
 
 # ---------------------------------------------------------------------------

@@ -61,6 +61,13 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[Builder], Bui
 # first 50 registry entries in insertion order. Rotated every round — see the
 # segment comments inside the tuple.
 DRIVER_PRIORITY: tuple[str, ...] = (
+    # --- FIXPOINT WINDOW — the five convergence loops run through
+    # one scale.fixpoint driver (one round per probe, exact stop at
+    # max_rounds): star-CC and kcore kernels and their consumers, the
+    # BFS/closeness builders merged into one tagged multi-source BFS,
+    # and q_dedup_cluster on connected_components_star:
+    "q_graph_cc", "q_graph_kcore", "q_graph_bfs", "q_graph_closeness",
+    "q_dedup_cluster", "q_dedup_canonical", "q_dedup_semantic",
     # --- ROUND-12 WINDOW (first 50) — second optimization round.
     # Ledger state entering round 12: r1∪…∪r11 covers all 295
     # registered queries, 290 hash-green + 5 rows-only by contract,
@@ -84,13 +91,9 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # reverted, but the text changed so the row renews);
     "q_events_rfm", "q_supplier_scorecard", "q_customer_migration",
     "q_rank_global",
-    # the chunked star-CC/kcore kernels (two rounds per
-    # materialization+checksum job) and the lazy-checkpoint loop
-    # cadence in BFS/closeness/label-prop/dedup-cluster
-    # (tools/ab_starcc.py; OPTIMIZATION_r12.md §4):
-    "q_graph_cc", "q_graph_kcore", "q_dedup_semantic",
-    "q_dedup_cluster", "q_dedup_canonical",
-    "q_graph_bfs", "q_graph_closeness", "q_graph_label_prop",
+    # the lazy-checkpoint loop cadence in label-prop
+    # (OPTIMIZATION_r12.md §4):
+    "q_graph_label_prop",
     "q_pareto_abc",
     # (c) re-attests of standing greens from the r11 window fill the
     # remaining slots:
@@ -122,7 +125,7 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # / q_dedup_semantic (the star-CC and kcore kernels now materialize
     # their per-round checkpoint via the convergence checksum — one job
     # per round instead of two, fixpoint and labels identical; A/B
-    # tools/ab_starcc.py);
+    # OPTIMIZATION_r11.md);
     # q_join_lateral (rides the memoized sqlapi.register_views — code
     # path changed, results unchanged).
     # (a) modified in the round-11 build phase after a prior green row:

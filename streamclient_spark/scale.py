@@ -654,6 +654,56 @@ def ntile_from_rank(rank: Column, n_total: Column, k: int) -> Column:
     return F.when(in_head, bucket_head).otherwise(bucket_tail).cast("int")
 
 
+class FixpointNotReached(RuntimeError):
+    """An iteration ran ``max_rounds`` rounds and was still changing."""
+
+
+def fixpoint(step, state: DataFrame, *, probe: list[Column], max_rounds: int):
+    """Iterate ``state = step(state)`` to its fixpoint; the one loop of
+    every convergence kernel (star-CC, k-core, the tagged BFS).
+
+    Every state, the initial one included, is cut from its lineage by
+    a LAZY ``localCheckpoint`` and then probed: ``state.agg(*probe)``.
+    The probe is a global aggregate, so it reads every partition and
+    stores the checkpoint's blocks as it goes; the checkpoint costs no
+    job of its own and a round is the step's shuffle stages plus one
+    probe action. ``probe`` is taken as aggregate columns rather than
+    as an action for that reason: a probe that skips partitions
+    (``take``, ``isEmpty``) would leave blocks unstored and the next
+    round would compute them again.
+
+    The fixpoint is the first round whose probe row equals the one
+    before it, so the probe must change whenever the state does: a
+    count for a state that only grows, a count plus an ``xxhash64``
+    sum (:func:`checksum`) otherwise; a hash collision (about 2⁻⁶⁴)
+    could end the loop one round early on an unconverged state.
+
+    Returns ``(state, rounds)``, ``rounds`` being the steps run, the
+    last of which changed nothing. Raises :class:`FixpointNotReached`
+    after exactly ``max_rounds`` steps that all changed the state: a
+    partial iterate (a half-peeled core, half-merged components) is
+    never returned as a result."""
+    state = state.localCheckpoint(eager=False)
+    sig = state.agg(*probe).first()
+    for rounds in range(1, max_rounds + 1):
+        nxt = step(state).localCheckpoint(eager=False)
+        nxt_sig = nxt.agg(*probe).first()
+        if nxt_sig == sig:
+            return nxt, rounds
+        state, sig = nxt, nxt_sig
+    raise FixpointNotReached(f"no fixpoint within max_rounds={max_rounds}")
+
+
+def checksum(*cols: str) -> list[Column]:
+    """Probe for :func:`fixpoint` over a set of rows: their count and
+    the sum of their ``xxhash64`` (as decimal(38,0): a long sum of
+    64-bit hashes overflows)."""
+    return [
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")),
+    ]
+
+
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
@@ -662,13 +712,9 @@ def connected_components_star(
 ) -> tuple[DataFrame, int]:
     """Connected components by the alternating large-star/small-star
     algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", 2014) — the scale fallback to plain min-label propagation
-    (q_dedup_cluster): propagation needs diameter-many rounds, this
-    needs O(log n) with high probability, so a single snake-shaped
-    component cannot stall the job. Use it when component diameters
-    are unknown (web graphs, transitive similarity chains); the
-    near-dup cliques of the dedup pipeline are diameter-2 and fine
-    either way.
+    Beyond", 2014). Plain min-label propagation needs diameter-many
+    rounds; this needs O(log n) with high probability, so a single
+    snake-shaped component cannot stall the job.
 
     Each round is two half-steps over the edge list, kept under the
     invariant ``first > second``:
@@ -682,40 +728,14 @@ def connected_components_star(
       to m.
 
     Both are one partial+final min-aggregate plus one co-partitioned
-    join on the grouping key — the same per-round plan shape as label
-    propagation, just O(log n) rounds instead of O(diameter).
-    ``localCheckpoint`` cuts lineage per round. Convergence = edge-set
-    fixpoint, tested by (count, xxhash64-sum) checksum — one tiny
-    aggregate per round; a checksum collision (~2⁻⁶⁴) could only end
-    the loop one round early on an unconverged-but-colliding state.
-
-    r11: the per-round checkpoint is LAZY and is materialized by the
-    checksum aggregate itself — the checksum touches every partition,
-    so the blocks are stored exactly as the eager form stored them,
-    but each round launches ONE job instead of two (measured on
-    q_graph_cc: 62 → 57 jobs end-to-end, labels identical;
-    tools/ab_starcc.py).
-
-    r12 (VERDICT r11 #8): TWO alternating-star rounds run per
-    materialization+checksum job — the inner round is left lazy (its
-    repeated ``e`` subtrees dedupe at runtime through exchange reuse;
-    plan depth stays bounded at two rounds) and convergence is tested
-    at chunk ends. Soundness of the distance-2 equality test: the
-    algorithm's potential (Kiveris et al. §3 — the sum of parent
-    labels) STRICTLY decreases on every non-fixpoint round, so
-    ``e_{2k} == e_{2k-2}`` is only possible when both intervening
-    rounds were already at the fixpoint — a 2-cycle cannot exist.
-    Detection granularity is 2 rounds, so the loop can run up to two
-    rounds PAST the fixpoint — value-identical by the same stability
-    argument the oracle's fixed 8-round unroll uses (a fixpoint edge
-    set is invariant under further rounds, and fixpoint-round passes
-    are the cheapest of the run), in exchange for half the
-    driver-scheduled jobs per round.
+    join on the grouping key. Rounds run under :func:`fixpoint` (lazy
+    checkpoint, one probe per round, edge-set :func:`checksum`).
 
     Returns ``(labels, rounds)``: labels is ``(node, label)`` with
     label = the component's minimum node id (roots label themselves);
-    ``rounds`` counts executed rounds (chunk granularity — it may
-    overshoot the exact fixpoint round by up to two).
+    ``rounds`` as :func:`fixpoint` counts them. Raises
+    :class:`FixpointNotReached` after ``max_rounds`` rounds without
+    convergence.
     """
     e = (
         edges.select(
@@ -724,21 +744,7 @@ def connected_components_star(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)  # materialized by the checksum
     )
-
-    def checksum(df: DataFrame):
-        # This aggregate DOUBLES as the lazy checkpoint's materializer
-        # (the one-job-per-round device, r11): it must stay a GLOBAL
-        # aggregate that touches every partition — a partition-skipping
-        # probe (isEmpty/take) would silently reintroduce the second
-        # materialization job without breaking results (ADVICE r11).
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) sum: a long sum of 64-bit hashes overflows
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return row["n"], row["h"]
 
     def star_round(e: DataFrame) -> DataFrame:
         # large-star over the symmetric neighborhood
@@ -767,17 +773,9 @@ def connected_components_star(
             .distinct()
         )
 
-    sig = checksum(e)
-    rounds = 0
-    while rounds < max_rounds:
-        # two rounds per chunk; only the chunk end is checkpointed
-        # (lazy) and checksummed — one job per TWO rounds
-        e = star_round(star_round(e)).localCheckpoint(eager=False)
-        rounds += 2
-        new_sig = checksum(e)
-        if new_sig == sig:
-            break
-        sig = new_sig
+    e, rounds = fixpoint(
+        star_round, e, probe=checksum("a", "b"), max_rounds=max_rounds
+    )
 
     # fixpoint edges are stars onto component minima; roots label
     # themselves
@@ -1143,30 +1141,17 @@ def kcore(
     degree.
 
     Per round: one partial+final count aggregate (degrees) and two
-    semi-joins of the edge list against the surviving-node set — the
-    same per-round plan shape as the star-CC half-steps, with
-    ``localCheckpoint`` cutting lineage and a (count, hash-sum)
-    checksum detecting the fixpoint in one tiny aggregate. Peeling
-    converges in O(rounds-to-stable) — typically a handful on real
-    graphs because most sub-core nodes fall in the first rounds."""
+    semi-joins of the edge list against the surviving-node set, run
+    under :func:`fixpoint` (lazy checkpoint, one probe per round,
+    edge-set :func:`checksum`). Peeling converges in a handful of
+    rounds on real graphs because most sub-core nodes fall in the
+    first. A partially peeled graph is not a k-core, so running out of
+    ``max_rounds`` raises :class:`FixpointNotReached`."""
     sym = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).unionAll(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    # lazy checkpoints, materialized by the checksum aggregate (the
-    # star-CC r11 device: one job per round instead of two)
-    e = sym.distinct().localCheckpoint(eager=False)
-
-    def checksum(df: DataFrame):
-        # Doubles as the lazy checkpoint's materializer — must stay a
-        # global aggregate over every partition (see the star-CC
-        # checksum note; ADVICE r11).
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return row["n"], row["h"]
 
     def peel(e: DataFrame) -> DataFrame:
         keep = (
@@ -1179,31 +1164,9 @@ def kcore(
             keep.withColumnRenamed("node", "u"), "u", "left_semi"
         ).join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
 
-    sig = checksum(e)
-    rounds = 0
-    converged = False
-    while rounds < max_rounds:
-        # r12 (the star-CC chunk device): two peels per
-        # materialization+checksum job. Peeling only ever SHRINKS the
-        # edge set, so checksum equality at distance 2 implies both
-        # intermediate rounds were already the fixpoint — no overrun
-        # ambiguity at all here, just half the jobs per round.
-        e = peel(peel(e)).localCheckpoint(eager=False)
-        rounds += 2
-        new_sig = checksum(e)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        # A partially-peeled graph is NOT a k-core; callers must never
-        # see one silently (ADVICE r4). Peeling rounds are bounded by
-        # the peel depth, so a real graph exhausting the budget means
-        # the budget is wrong — fail loudly.
-        raise RuntimeError(
-            f"kcore did not reach a fixpoint within max_rounds={max_rounds}"
-        )
-
+    e, rounds = fixpoint(
+        peel, sym.distinct(), probe=checksum("u", "v"), max_rounds=max_rounds
+    )
     nodes = e.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("core_deg")
     )

@@ -107,9 +107,10 @@ class FileJournalTransport:
         return {shard: self._count(shard) for shard in self._shards()}
 
     def _count(self, shard: int) -> int:
-        """Non-blank lines of one shard. A trailing line without its
-        newline counts, as a line scan counts it, and is read again by
-        the next call."""
+        """Lines of one shard, numbered as :meth:`fetch` numbers them
+        (blank lines included). A trailing line without its newline
+        counts, as a line scan counts it, and is read again by the next
+        call."""
         size, lines = self._pos.get(shard, (0, 0))
         with open(self._shard_path(shard), "rb") as f:
             if size:
@@ -121,11 +122,11 @@ class FileJournalTransport:
             while chunk := f.read(self.CHUNK):
                 data = tail + chunk
                 done = data.rfind(b"\n") + 1
-                lines += sum(1 for line in data[:done].split(b"\n") if line.strip())
+                lines += data.count(b"\n", 0, done)
                 size += done
                 tail = data[done:]
         self._pos[shard] = (size, lines)
-        return lines + bool(tail.strip())
+        return lines + bool(tail)
 
     def fetch(self, shard: int, lo: int, hi: int) -> Iterable[tuple]:
         with open(self._shard_path(shard), "rb") as f:

@@ -195,11 +195,16 @@ def test_ranked_by_range_matches_window_row_number(spark, sf_oracle):
 
 
 RANGE_LAYOUT_CONSUMERS = [
+    # ranked_by_range
     "q_customer_migration",
     "q_events_rfm",
     "q_rank_global",
     "q_sample_shuffle",
     "q_supplier_scorecard",
+    # running_sum_by_range / running_max_by_range
+    "q_pareto_abc",
+    "q_part_abc_xyz",
+    "q_skyline_2d",
 ]
 
 
@@ -207,10 +212,12 @@ RANGE_LAYOUT_CONSUMERS = [
 def test_range_layout_consumers_match_oracle_on_few_partitions(
     spark, sf_oracle, partitions
 ):
-    """Every ``ranked_by_range`` consumer hash-matches its oracle when
-    ``spark.sql.shuffle.partitions`` is below its group count (each
-    group takes at least one bucket, so the layout has more buckets
-    than partitions), as on a 1- or 2-core machine."""
+    """Every ``ranked_by_range``, ``running_sum_by_range`` and
+    ``running_max_by_range`` consumer hash-matches its oracle at 1 and
+    2 ``spark.sql.shuffle.partitions``, as on a 1- or 2-core machine.
+    For ``ranked_by_range`` that is below its group count (each group
+    takes at least one bucket, so the layout has more buckets than
+    partitions); the running layouts range-partition their input."""
     from streamclient_spark.plans.registry import load_all
     from tests.oracle import compare
 
@@ -388,21 +395,122 @@ def test_star_cc_long_path_converges_fast(spark):
     assert rounds <= 12
 
 
-def test_star_cc_matches_label_propagation(spark, sf_oracle):
-    # same components as the propagation-based q_dedup_cluster on the
-    # real near-dup pair graph (both label by component minimum)
+def test_star_cc_matches_union_find(spark, sf_oracle):
+    # on the real near-dup pair graph, every node gets its component's
+    # minimum id: checked against a plain union-find over the pairs
     from streamclient_spark.functions.dedup import near_dup_pairs
-    from streamclient_spark.plans.registry import load_all
     from streamclient_spark.scale import connected_components_star
 
     pairs = near_dup_pairs(spark, sf_oracle).select("a_id", "b_id")
     star, _ = connected_components_star(pairs, src="a_id", dst="b_id")
     got = {(r["node"], r["label"]) for r in star.collect()}
-    prop = load_all()["q_dedup_cluster"].builder(spark, sf_oracle)
-    want = {
-        (r["doc_id"], r["cluster_id"]) for r in prop.collect()
-    }
+
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs.collect():
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root stays the minimum
+    want = {(n, find(n)) for n in list(parent)}
+    assert len(want) > 0
     assert got == want
+
+
+def test_fixpoint_stops_at_exactly_max_rounds(spark):
+    # a state that changes every round: an odd budget runs exactly
+    # that many steps, then raises the named error
+    from streamclient_spark.scale import FixpointNotReached, fixpoint
+
+    state = spark.range(4).select(F.col("id").alias("x"))
+    calls = []
+
+    def step(df):
+        calls.append(1)
+        return df.select((F.col("x") + 1).alias("x"))
+
+    with pytest.raises(FixpointNotReached, match="max_rounds=3"):
+        fixpoint(step, state, probe=[F.sum("x")], max_rounds=3)
+    assert len(calls) == 3
+
+
+def test_fixpoint_reports_the_true_fixpoint_round(spark):
+    # values climb by one per round to a cap: the state stops changing
+    # after the largest gap, so the first step that changes nothing is
+    # round max_gap + 1
+    from streamclient_spark.scale import checksum, fixpoint
+
+    cap, values = 5, [0, 2, 5, 4]
+    state = spark.createDataFrame([(v,) for v in values], "x long")
+    out, rounds = fixpoint(
+        lambda df: df.select(F.least(F.col("x") + 1, F.lit(cap)).alias("x")),
+        state,
+        probe=checksum("x"),
+        max_rounds=cap + 1,
+    )
+    assert rounds == cap - min(values) + 1
+    assert [r["x"] for r in out.collect()] == [cap] * len(values)
+
+
+def test_kcore_rounds_equal_pure_python_peel(spark):
+    # a triangle with a 4-node tail: k=2 peels one tail node a round,
+    # so the peel is stable after 4 rounds and round 5 changes nothing
+    from streamclient_spark.scale import kcore
+
+    edges = [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (4, 5), (5, 6)]
+    alive, want_rounds = {n for e in edges for n in e}, 0
+    while True:
+        want_rounds += 1
+        deg = {n: 0 for n in alive}
+        for u, v in edges:
+            if u in alive and v in alive:
+                deg[u] += 1
+                deg[v] += 1
+        keep = {n for n in alive if deg[n] >= 2}
+        if keep == alive:
+            break
+        alive = keep
+    nodes, rounds = kcore(
+        spark.createDataFrame(edges, "src long, dst long"), 2
+    )
+    assert {r["node"] for r in nodes.collect()} == alive == {0, 1, 2}
+    assert rounds == want_rounds == 5
+
+
+def test_fixpoint_probe_is_the_only_job_per_round(spark):
+    # the lazy checkpoint is stored by the probe's own pass: a map-only
+    # step costs exactly one probe per round plus the initial probe,
+    # each as many jobs as the same aggregate run on its own
+    from streamclient_spark.scale import checksum, fixpoint
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    state = spark.range(0, 64, numPartitions=4).select(
+        (F.col("id") % 8).alias("x")
+    )
+    try:
+        sc.setJobGroup("fixpoint-probe-alone", "probe")
+        state.agg(*checksum("x")).first()
+        per_probe = len(tracker.getJobIdsForGroup("fixpoint-probe-alone"))
+        sc.setJobGroup("fixpoint-rounds", "rounds")
+        _out, rounds = fixpoint(
+            lambda df: df.select(F.least(F.col("x") + 1, F.lit(7)).alias("x")),
+            state,
+            probe=checksum("x"),
+            max_rounds=10,
+        )
+        jobs = len(tracker.getJobIdsForGroup("fixpoint-rounds"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rounds == 8
+    assert per_probe >= 1
+    assert jobs == (rounds + 1) * per_probe
 
 
 def test_pagerank_cycle_uniform_and_deterministic(spark):
@@ -686,10 +794,13 @@ def test_closeness_converges_within_oracle_unroll(spark, sf_oracle):
     # convergence within the wider margin.
     from streamclient_spark.operators.relational import (
         _CLOSE_ROUNDS,
-        _closeness_layers,
+        _CLOSE_SEEDS,
+        _bfs_layers,
     )
 
-    _dist, rounds = _closeness_layers(spark, sf_oracle)
+    _dist, _adj, rounds = _bfs_layers(
+        spark, sf_oracle, _CLOSE_SEEDS, tag_each_seed=True
+    )
     assert rounds <= _CLOSE_ROUNDS, (
         f"per-seed BFS needed {rounds} rounds; oracle unrolls only "
         f"{_CLOSE_ROUNDS} — widen _CLOSE_ROUNDS"

@@ -361,11 +361,11 @@ def test_journal_transport_latest_matches_line_scan(tmp_path):
             for i in range(first, first + n):
                 f.write(_journal_event(i, i, "signup", i, value=value) + "\n")
                 if rng.random() < 0.05:
-                    f.write("\n")  # blank lines are not counted
+                    f.write("\n")  # blank lines take an offset too
 
     def check(t):
         want, raw = _scan_ids(path)
-        assert t.latest() == {0: len(want)}
+        assert t.latest() == {0: raw}
         assert [r[0] for r in t.fetch(0, 0, raw)] == want
 
     for chunk in (7, 100, 1 << 20):
@@ -384,6 +384,26 @@ def test_journal_transport_latest_matches_line_scan(tmp_path):
         path.write_text("")
         append(0, first + 3, value=10.5)
         check(t)
+
+
+def test_live_source_delivers_last_event_after_blank_lines(tmp_path):
+    """A journal with blank lines delivers every event, its last one
+    included, in the first trigger: ``latest`` numbers lines as
+    ``fetch`` does, so the end offset is not short by the blanks."""
+    from streamclient_spark.sources.replay import _LiveStreamReader
+
+    journal = tmp_path / "journal"
+    journal.mkdir()
+    (journal / "shard-0.jsonl").write_text(
+        _journal_event(0, 0, "signup", 0) + "\n\n"
+        + _journal_event(1, 1, "signup", 1) + "\n\n\n"
+        + _journal_event(2, 2, "signup", 2) + "\n"
+    )
+    r = _LiveStreamReader({"transport": TRANSPORT, "journal_dir": str(journal)})
+    start = r.initialOffset()
+    end = r.latestOffset()
+    rows = [row for p in r.partitions(start, end) for row in r.read(p)]
+    assert [row[0] for row in rows] == [0, 1, 2]
 
 
 def test_journal_transport_latest_reads_only_appended_bytes(tmp_path):
